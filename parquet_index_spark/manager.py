@@ -104,23 +104,30 @@ class IndexedDataFrame:
                  for p in self._collapse_to_directories(survivors)]
         return reader.parquet(*paths).filter(residual)
 
-    def _prune(self, ast):
-        """Driver-side numpy fold by default; Spark-job fold when the
-        metadata itself is too big for driver memory
-        (spark.sql.index.pruning.sparkThreshold blocks, default 5M)."""
+    def _fold_route(self) -> tuple:
+        """-> (spark_job, tz): whether the fold runs as a Spark job over
+        the stats shards — when the metadata itself is too big for
+        driver memory (above spark.sql.index.pruning.sparkThreshold
+        blocks, default 5M) — and the session time zone the fold
+        localizes instant-timestamp literals in."""
         from parquet_index_spark import pruning_spark
+        key = pruning_spark.SPARK_PRUNING_THRESHOLD
+        raw = self._spark.conf.get(key, str(pruning_spark.DEFAULT_THRESHOLD))
         try:
-            threshold = int(self._spark.conf.get(
-                pruning_spark.SPARK_PRUNING_THRESHOLD,
-                str(pruning_spark.DEFAULT_THRESHOLD)))
-        except Exception:
-            threshold = pruning_spark.DEFAULT_THRESHOLD
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:
-            tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+            threshold = int(raw)
+        except ValueError:
+            raise ValueError(
+                f"Unsupported {key}={raw!r}, expected an integer block "
+                "count") from None
+        tz = self._spark.conf.get("spark.sql.session.timeZone")
+        return int(self._metadata.files["blocks"].sum()) > threshold, tz
+
+    def _prune(self, ast):
+        """Driver-side numpy fold by default; the same fold per stats
+        shard as a Spark job past the threshold (``_fold_route``)."""
+        from parquet_index_spark import pruning_spark
+        spark_job, tz = self._fold_route()
+        if spark_job:
             return pruning_spark.prune_files_with_spark(
                 self._spark, self._metadata, ast, tz)
         return prune_files(ast, self._metadata.context(), tz)
@@ -396,14 +403,12 @@ class IndexedDataFrame:
         values, data-recomputed where footers are distrusted).
 
         ``last_prune_info`` reports files scanned = boundary files. Above
-        the driver-fold threshold the same decomposition runs as a Spark
-        job over the stats parquet (pruning_spark.count_files_with_spark)
+        the driver-fold threshold the same decomposition runs per stats
+        shard as a Spark job (pruning_spark.count_files_with_spark)
         — at 100 TB, where the metadata outgrows the driver, a trailing-
         window count stays a metadata job plus boundary scans. Falls back
         to pruned ``filter(pred).count()`` only when the predicate is
         outside the foldable grammar."""
-        import numpy as np
-
         from parquet_index_spark import pruning as PR
         from parquet_index_spark import pruning_spark
 
@@ -416,32 +421,13 @@ class IndexedDataFrame:
         ast, residual = self._compile(predicate)
         if ast is None:
             return self.filter(residual).count()
-        try:
-            threshold = int(self._spark.conf.get(
-                pruning_spark.SPARK_PRUNING_THRESHOLD,
-                str(pruning_spark.DEFAULT_THRESHOLD)))
-        except Exception:
-            threshold = pruning_spark.DEFAULT_THRESHOLD
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:
-            tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+        spark_job, tz = self._fold_route()
+        if spark_job:
             total, scan_paths = pruning_spark.count_files_with_spark(
                 self._spark, self._metadata, ast, tz)
         else:
-            ctx = self._metadata.context()
-            may = PR.evaluate(ast, ctx, tz)
-            full = PR.evaluate_full(ast, ctx, tz)
-            boundary = may & ~full
-            file_boundary = np.zeros(len(ctx.file_paths), dtype=bool)
-            file_boundary[ctx.file_ids[boundary]] = True
-            # full blocks inside a scanned file are counted by the scan
-            full_outside_scan = full & ~file_boundary[ctx.file_ids]
-            total = int(ctx.rows[full_outside_scan].sum())
-            scan_paths = [p for p, b
-                          in zip(ctx.file_paths, file_boundary) if b]
+            total, _lo, _hi, scan_paths = PR.finish_partials(
+                PR.file_partials(ast, self._metadata.context(), tz))
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:
@@ -466,11 +452,9 @@ class IndexedDataFrame:
         values (instant timestamps tz-aware UTC); ``(None, None)`` when
         no row matches or all matching values are NULL — SQL min/max
         semantics. Above the driver-fold threshold the decomposition runs
-        as a Spark job over the stats parquet
+        per stats shard as a Spark job
         (pruning_spark.min_max_files_with_spark); falls back to a pruned
         scan aggregate for unindexed columns or unfoldable predicates."""
-        import numpy as np
-
         from parquet_index_spark import pruning as PR
         from parquet_index_spark import pruning_spark
 
@@ -492,45 +476,13 @@ class IndexedDataFrame:
             ast, residual = self._compile(predicate)
             if ast is None:
                 return _scan_fallback(residual)
-        try:
-            threshold = int(self._spark.conf.get(
-                pruning_spark.SPARK_PRUNING_THRESHOLD,
-                str(pruning_spark.DEFAULT_THRESHOLD)))
-        except Exception:
-            threshold = pruning_spark.DEFAULT_THRESHOLD
-        try:
-            tz = self._spark.conf.get("spark.sql.session.timeZone")
-        except Exception:
-            tz = None
-        total_blocks = int(self._metadata.files["blocks"].sum())
-        if total_blocks > threshold:
+        spark_job, tz = self._fold_route()
+        if spark_job:
             lo, hi, scan_paths = pruning_spark.min_max_files_with_spark(
                 self._spark, self._metadata, column, ast, tz)
         else:
-            ctx = self._metadata.context()
-            stats = ctx.columns[column]
-            if ast is None:
-                may = np.ones(ctx.n, dtype=bool)
-                full = may
-            else:
-                may = PR.evaluate(ast, ctx, tz)
-                full = PR.evaluate_full(ast, ctx, tz)
-            # statless-but-maybe-non-null blocks hide their extremes from
-            # metadata even when the predicate proves them full
-            statless = ~stats.has & (stats.nulls != ctx.rows)
-            scan_block = (may & ~full) | (full & statless)
-            file_scan = np.zeros(len(ctx.file_paths), dtype=bool)
-            file_scan[ctx.file_ids[scan_block]] = True
-            meta_blocks = full & stats.has & ~file_scan[ctx.file_ids]
-            lo = hi = None
-            if meta_blocks.any():
-                if kind == ityp.STRING:
-                    lo = min(x for x in stats.min_s[meta_blocks])
-                    hi = max(x for x in stats.max_s[meta_blocks])
-                else:
-                    lo = int(stats.min_l[meta_blocks].min())
-                    hi = int(stats.max_l[meta_blocks].max())
-            scan_paths = [p for p, b in zip(ctx.file_paths, file_scan) if b]
+            _rows, lo, hi, scan_paths = PR.finish_partials(PR.file_partials(
+                ast, self._metadata.context(), tz, column))
         self._manager.last_prune_info = PruneInfo(
             len(all_paths), len(scan_paths), pruned=True)
         if scan_paths:
@@ -549,11 +501,6 @@ class IndexedDataFrame:
                 if kind == ityp.STRING:
                     s_lo, s_hi = smn, smx
                 else:
-                    try:
-                        tz = self._spark.conf.get(
-                            "spark.sql.session.timeZone")
-                    except Exception:
-                        tz = None
                     s_lo = ityp.to_long_space(smn, kind, tz)
                     s_hi = ityp.to_long_space(smx, kind, tz)
                 lo = s_lo if lo is None else min(lo, s_lo)
@@ -1266,12 +1213,14 @@ class DataFrameIndexManager:
         # by both fold paths but still cost every metadata read — the
         # compaction pass is the natural purge point. Left-semi against
         # the manifest's path column; Catalyst broadcasts it when small.
+        # Hash-partitioning by path keeps each file's rows in one shard,
+        # so the Spark-job fold's per-shard tasks see whole files.
         manifest_paths = (self.spark.read
                           .parquet(os.path.join(index_dir, FILES_FILE))
                           .select("path"))
         (self.spark.read.parquet(stats_dir)
          .join(manifest_paths, "path", "left_semi")
-         .repartition(target)
+         .repartition(target, "path")
          .write.mode("overwrite").parquet(tmp))
         marker = os.path.join(index_dir, SUCCESS_FILE)
         os.remove(marker)
@@ -1478,7 +1427,7 @@ class DataFrameIndexManager:
 # Keyed on applicationId, NOT the CPython id of the session: ids are reused after GC,
 # so a dead session's Metastore (and its 16-entry metadata cache) could be
 # served to a NEW session landing on the same id (round-10 verdict — the
-# hazard class fixed in pruning_spark's InBloom broadcast cache). Sessions
+# hazard class fixed in pruning_spark's predicate broadcast cache). Sessions
 # sharing one SparkContext share the singleton, which is safe: Metastore
 # state derives from the filesystem location, not session conf.
 _METASTORES: Dict[tuple, Metastore] = {}

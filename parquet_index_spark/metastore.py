@@ -161,6 +161,98 @@ class LocationSpec:
                             tail)
 
 
+
+def build_context(stats: pd.DataFrame, index_columns: Dict[str, str],
+                  partition_columns: Dict[str, str], paths,
+                  partition_json) -> BlockStatsContext:
+    """The fold's columnar context over a stats frame (rows in
+    collector.STATS_SCHEMA) and the manifest's ``path`` and
+    ``partition_json`` columns.
+
+    The driver builds it over the whole stats table; each task of the
+    Spark-job fold (pruning_spark) builds it over one stats shard.
+    ``index_columns`` / ``partition_columns`` (name -> kind) pick the
+    columns to expose; every block carries one stats row per indexed
+    column, so any non-empty subset yields the same blocks."""
+    file_paths = list(paths)
+    path_to_id = {p: i for i, p in enumerate(file_paths)}
+    # the manifest (files.parquet) is the commit point: stats rows for
+    # paths outside it are orphans from an interrupted refresh — ignore
+    # them instead of crashing on the NaN file-id cast (round-1 ADVICE)
+    stats = stats[stats["path"].isin(path_to_id)]
+    # canonical block order: (path, block); every indexed column has one
+    # row per block, so slicing per column yields aligned arrays
+    base = stats[["path", "block", "rows"]].drop_duplicates().sort_values(
+        ["path", "block"], kind="mergesort").reset_index(drop=True)
+    n = len(base)
+    file_ids = base["path"].map(path_to_id).to_numpy(dtype=np.int64)
+    rows = base["rows"].to_numpy(dtype=np.int64)
+    block_key = pd.MultiIndex.from_frame(base[["path", "block"]])
+
+    columns: Dict[str, ColumnBlockStats] = {}
+    frames: Dict[str, pd.DataFrame] = {}
+    for col, kind in index_columns.items():
+        sub = stats[stats["column"] == col].set_index(["path", "block"])
+        sub = sub.reindex(block_key)
+        has = sub["has_stats"].fillna(False).to_numpy(dtype=bool)
+        nulls = sub["nulls"].fillna(-1).to_numpy(dtype=np.int64)
+        if kind == ityp.STRING:
+            min_s = np.array(
+                [x if isinstance(x, str) else None for x in sub["min_str"]],
+                dtype=object)
+            max_s = np.array(
+                [x if isinstance(x, str) else None for x in sub["max_str"]],
+                dtype=object)
+            cbs = ColumnBlockStats(kind, has, nulls, None, None, min_s, max_s)
+        else:
+            min_l = sub["min_long"].fillna(0).to_numpy(dtype=np.int64)
+            max_l = sub["max_long"].fillna(0).to_numpy(dtype=np.int64)
+            cbs = ColumnBlockStats(kind, has, nulls, min_l, max_l, None, None)
+        columns[col] = cbs
+        frames[col] = sub[["dict_long", "dict_str", "bloom"]]
+
+    # partition columns become exact pseudo-stats: min == max == value
+    # (unifies the reference's separate partition pruning,
+    # ParquetIndex.scala:112-145, with the block fold)
+    if partition_columns:
+        pvals_per_file = [json.loads(pj) for pj in partition_json]
+        for pcol, pkind in partition_columns.items():
+            raw = [pv.get(pcol) for pv in pvals_per_file]
+            parsed = [None if r is None or r == "__HIVE_DEFAULT_PARTITION__"
+                      else ityp.parse_partition_value(r, pkind) for r in raw]
+            per_block = [parsed[fid] for fid in file_ids]
+            has = np.array([v is not None for v in per_block], dtype=bool)
+            nulls = np.where(has, 0, rows)
+            # instant-timestamp partition values are wall-clock directory
+            # strings; expose them as NTZ so literal folding stays in
+            # wall space (no session-tz localization)
+            stat_kind = ityp.TIMESTAMP_NTZ if pkind == ityp.TIMESTAMP else pkind
+            if pkind == ityp.STRING:
+                arr = np.array(per_block, dtype=object)
+                cbs = ColumnBlockStats(stat_kind, has, nulls, None, None, arr, arr)
+            else:
+                arr = np.array([0 if v is None else v for v in per_block],
+                               dtype=np.int64)
+                cbs = ColumnBlockStats(stat_kind, has, nulls, arr, arr, None, None)
+            columns[pcol] = cbs
+
+    def load_membership(column: str):
+        """Vectorized membership structure for a column (lazy).
+
+        One flat-array build pass — no iterrows, no per-block objects
+        (round-1 VERDICT flagged the per-row Python in the query path)."""
+        frame = frames.get(column)
+        if frame is None:
+            return None
+        cm = ColumnMembership.build(frame["dict_long"].to_numpy(),
+                                    frame["dict_str"].to_numpy(),
+                                    frame["bloom"].to_numpy())
+        return cm if cm.has_filter.any() else None
+
+    return BlockStatsContext(n, rows, file_ids, file_paths, columns,
+                             membership_loader=load_membership)
+
+
 class IndexMetadata:
     """Loaded index for one table; prunes files and reconstructs the scan."""
 
@@ -194,91 +286,14 @@ class IndexMetadata:
 
     def context(self) -> BlockStatsContext:
         if self._ctx is None:
-            self._ctx = self._build_context()
+            self._ctx = build_context(
+                self._load_stats().to_pandas(), self.index_columns,
+                self.partition_columns, self.files["path"],
+                self.files["partition_json"])
             if self._filter_eager:
                 for c in self.index_columns:
                     self._ctx.membership(c)
         return self._ctx
-
-    def _build_context(self) -> BlockStatsContext:
-        stats = self._load_stats().to_pandas()
-        file_paths = list(self.files["path"])
-        path_to_id = {p: i for i, p in enumerate(file_paths)}
-        # the manifest (files.parquet) is the commit point: stats rows for
-        # paths outside it are orphans from an interrupted refresh — ignore
-        # them instead of crashing on the NaN file-id cast (round-1 ADVICE)
-        stats = stats[stats["path"].isin(path_to_id)]
-        # canonical block order: (path, block); every indexed column has one
-        # row per block, so slicing per column yields aligned arrays
-        base = stats[["path", "block", "rows"]].drop_duplicates().sort_values(
-            ["path", "block"], kind="mergesort").reset_index(drop=True)
-        n = len(base)
-        file_ids = base["path"].map(path_to_id).to_numpy(dtype=np.int64)
-        rows = base["rows"].to_numpy(dtype=np.int64)
-        block_key = pd.MultiIndex.from_frame(base[["path", "block"]])
-
-        columns: Dict[str, ColumnBlockStats] = {}
-        self._membership_frames: Dict[str, pd.DataFrame] = {}
-        for col, kind in self.index_columns.items():
-            sub = stats[stats["column"] == col].set_index(["path", "block"])
-            sub = sub.reindex(block_key)
-            has = sub["has_stats"].fillna(False).to_numpy(dtype=bool)
-            nulls = sub["nulls"].fillna(-1).to_numpy(dtype=np.int64)
-            if kind == ityp.STRING:
-                min_s = np.array(
-                    [x if isinstance(x, str) else None for x in sub["min_str"]],
-                    dtype=object)
-                max_s = np.array(
-                    [x if isinstance(x, str) else None for x in sub["max_str"]],
-                    dtype=object)
-                cbs = ColumnBlockStats(kind, has, nulls, None, None, min_s, max_s)
-            else:
-                min_l = sub["min_long"].fillna(0).to_numpy(dtype=np.int64)
-                max_l = sub["max_long"].fillna(0).to_numpy(dtype=np.int64)
-                cbs = ColumnBlockStats(kind, has, nulls, min_l, max_l, None, None)
-            columns[col] = cbs
-            self._membership_frames[col] = sub[["dict_long", "dict_str", "bloom"]]
-
-        # partition columns become exact pseudo-stats: min == max == value
-        # (unifies the reference's separate partition pruning,
-        # ParquetIndex.scala:112-145, with the block fold)
-        if self.partition_columns:
-            pvals_per_file = [json.loads(pj) for pj in self.files["partition_json"]]
-            for pcol, pkind in self.partition_columns.items():
-                raw = [pv.get(pcol) for pv in pvals_per_file]
-                parsed = [None if r is None or r == "__HIVE_DEFAULT_PARTITION__"
-                          else ityp.parse_partition_value(r, pkind) for r in raw]
-                per_block = [parsed[fid] for fid in file_ids]
-                has = np.array([v is not None for v in per_block], dtype=bool)
-                nulls = np.where(has, 0, rows)
-                # instant-timestamp partition values are wall-clock directory
-                # strings; expose them as NTZ so literal folding stays in
-                # wall space (no session-tz localization)
-                stat_kind = ityp.TIMESTAMP_NTZ if pkind == ityp.TIMESTAMP else pkind
-                if pkind == ityp.STRING:
-                    arr = np.array(per_block, dtype=object)
-                    cbs = ColumnBlockStats(stat_kind, has, nulls, None, None, arr, arr)
-                else:
-                    arr = np.array([0 if v is None else v for v in per_block],
-                                   dtype=np.int64)
-                    cbs = ColumnBlockStats(stat_kind, has, nulls, arr, arr, None, None)
-                columns[pcol] = cbs
-
-        return BlockStatsContext(n, rows, file_ids, file_paths, columns,
-                                 membership_loader=self._load_membership)
-
-    def _load_membership(self, column: str):
-        """Vectorized membership structure for a column (lazy).
-
-        One flat-array build pass — no iterrows, no per-block objects
-        (round-1 VERDICT flagged the per-row Python in the query path)."""
-        frame = getattr(self, "_membership_frames", {}).get(column)
-        if frame is None:
-            return None
-        cm = ColumnMembership.build(frame["dict_long"].to_numpy(),
-                                    frame["dict_str"].to_numpy(),
-                                    frame["bloom"].to_numpy())
-        return cm if cm.has_filter.any() else None
 
     # -- helpers -----------------------------------------------------------
     def all_file_paths(self) -> List[str]:

@@ -469,3 +469,116 @@ def _eval_full(pred: P.Predicate, ctx: BlockStatsContext,
             out &= _cmp_full(stats, hi, "max_lt")
         return out
     return _false(ctx)
+
+
+# ---------------------------------------------------------------------------
+# Per-file bands: the metadata answer of count_where / min_max_where
+# ---------------------------------------------------------------------------
+# Both fold routes compute per-file partials with `file_partials` (the
+# driver over the whole context, the Spark-job route per stats shard),
+# and finish them with `finish_partials`. Partials are tuples
+#   (path, may, boundary, full_rows, lo, hi);
+# the Spark-job route first merges its shards' partials per path
+# (`merge_partials`).
+
+
+def _per_file(ctx: BlockStatsContext, mask: np.ndarray) -> np.ndarray:
+    """bool[n_blocks] -> bool[n_files]: the file holds a masked block."""
+    out = np.zeros(len(ctx.file_paths), dtype=bool)
+    out[ctx.file_ids[mask]] = True
+    return out
+
+
+def _file_extremes(ctx: BlockStatsContext, mask: np.ndarray,
+                   values: np.ndarray, lowest: bool) -> np.ndarray:
+    """object[n_files]: each file's smallest (``lowest``) or largest
+    value over its masked blocks, None for files with none."""
+    out = np.full(len(ctx.file_paths), None, dtype=object)
+    fid, vals = ctx.file_ids[mask], values[mask]
+    order = np.argsort(vals, kind="stable")
+    order = order[np.argsort(fid[order], kind="stable")]
+    f = fid[order]
+    if len(f):
+        edge = (np.r_[True, f[1:] != f[:-1]] if lowest
+                else np.r_[f[1:] != f[:-1], True])
+        out[f[edge]] = vals[order][edge].tolist()
+    return out
+
+
+def file_partials(pred: Optional[P.Predicate], ctx: BlockStatsContext,
+                  tz: str = None, column: Optional[str] = None) -> list:
+    """Per-file partials of the three-band fold, for every file with a
+    block that may or fully matches: (path, may, boundary, full_rows,
+    lo, hi).
+
+    - may: some block might match (the prune survivor flag);
+    - boundary: the file must be scanned — it holds a block that may
+      but is not proven to fully match, or (with ``column``) a full
+      block whose ``column`` stats are absent yet possibly non-null,
+      whose extremes metadata cannot give;
+    - full_rows: rows of the blocks proven to fully match;
+    - lo / hi: ``column``'s stored extremes over the full blocks that
+      carry stats (stat space), None without.
+
+    ``pred`` None matches every row (a bare min/max); a ``column`` the
+    context does not index proves nothing, so every may-file scans."""
+    if pred is None:
+        may = full = _true(ctx)
+    else:
+        may = evaluate(pred, ctx, tz)
+        full = evaluate_full(pred, ctx, tz)
+    boundary = may & ~full
+    lo = hi = np.full(len(ctx.file_paths), None, dtype=object)
+    if column is not None:
+        stats = ctx.columns.get(column)
+        if stats is None:
+            boundary = may
+        else:
+            boundary = boundary | (full & _statless_maybe(stats, ctx))
+            meta = full & stats.has
+            if stats.kind == ityp.STRING:
+                mn, mx = stats.min_s, stats.max_s
+            else:
+                mn, mx = stats.min_l, stats.max_l
+            lo = _file_extremes(ctx, meta, mn, lowest=True)
+            hi = _file_extremes(ctx, meta, mx, lowest=False)
+    may_f, full_f = _per_file(ctx, may), _per_file(ctx, full)
+    rows_f = np.bincount(ctx.file_ids[full], weights=ctx.rows[full],
+                         minlength=len(ctx.file_paths)).astype(np.int64)
+    bnd_f = _per_file(ctx, boundary)
+    return [(ctx.file_paths[i], bool(may_f[i]), bool(bnd_f[i]),
+             int(rows_f[i]), lo[i], hi[i])
+            for i in np.flatnonzero(may_f | full_f)]
+
+
+def merge_partials(partials) -> list:
+    """One partial per path from the partials of several stats shards.
+
+    A path seen in one shard keeps its partial. A path seen in several
+    (an index whose shards were written before compaction kept each
+    file in one shard) may have one block's column rows split between
+    shards, so each shard's full-match fold can claim the same block:
+    its may flags OR together and the file is scanned, which is exact."""
+    merged: Dict[str, tuple] = {}
+    for part in partials:
+        prev = merged.get(part[0])
+        merged[part[0]] = part if prev is None else \
+            (part[0], prev[1] or part[1], True, 0, None, None)
+    return list(merged.values())
+
+
+def finish_partials(partials) -> tuple:
+    """-> (full_rows, lo, hi, scan_paths): the metadata-proven row count
+    and extremes over files needing no scan, plus the files that do
+    (their full blocks are counted by the scan, not by metadata)."""
+    rows, lo, hi, scan = 0, None, None, []
+    for path, _may, bnd, r, l, h in partials:
+        if bnd:
+            scan.append(path)
+            continue
+        rows += r
+        if l is not None and (lo is None or l < lo):
+            lo = l
+        if h is not None and (hi is None or h > hi):
+            hi = h
+    return rows, lo, hi, scan

@@ -1,657 +1,155 @@
-"""Distributed pruning: fold the predicate with a Spark job over the
-metadata parquet instead of driver-side numpy.
+"""Spark-job fold: the driver's fold (pruning.py) run on executors, one
+task per stats shard, for indexes whose metadata outgrows driver memory.
 
-The numpy fold (pruning.py) needs the whole stats table in driver memory —
-fine up to a few million row groups, but a 100 TB table with small row
-groups can push metadata past driver RAM. This path expresses the same
-fold as a Spark aggregation over the stats *parquet* directly:
-
-    stats (long format, one row per file x block x column)
-      -> conditional-aggregation pivot per (path, block) over the
-         referenced columns only
-      -> boolean fold expression (same boundary semantics)
-      -> bool_or per path -> surviving file list
-
-Membership (dict/bloom/bitmap) refinement applies here too (round-2): dict
-filters fold as ``arrays_overlap`` on the metadata's list column — pure
-codegen; blooms and dense int bitmaps probe through an Arrow-batched pandas
-UDF over the binary column (executor-side, no driver collect), dispatched
-on the serialization magic. The reference applies the same
-per-block refinement in ParquetIndexFilters.scala:54-75. The engine
-auto-switches to this path based on
-``spark.sql.index.pruning.sparkThreshold`` (block count).
+Each task reads its shard with pyarrow (only the rows of the columns the
+predicate references), builds a ``BlockStatsContext`` with the driver's
+own builder (metastore.build_context: orphan filtering, partition
+pseudo-stats, lazy membership decoding), runs the same pruning
+functions, and returns small per-file results that the driver merges by
+path. Shard compaction keeps a file's blocks in one shard, so each
+task's fold is as precise as the driver's; a file split across shards
+(an index compacted by an older release) still folds soundly, but may be
+kept or scanned needlessly until the next compaction or rebuild. The
+engine takes this route above
+``spark.sql.index.pruning.sparkThreshold`` blocks.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import pickle
 from typing import List
 
-import pandas as pd
-
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from parquet_index_spark import predicates as P
-from parquet_index_spark import types as ityp
+from parquet_index_spark import pruning
 
 SPARK_PRUNING_THRESHOLD = "spark.sql.index.pruning.sparkThreshold"
 DEFAULT_THRESHOLD = 5_000_000
 
-
-def _pivot_stats(stats_df, columns: List[str]):
-    """Wide per-(path, block) frame for the referenced columns, membership
-    payloads included (exactly one stats row exists per path x block x
-    column, so first(ignorenulls) is exact)."""
-    aggs = [F.first("rows").alias("__rows")]
-    for c in columns:
-        is_c = F.col("column") == c
-        aggs += [
-            F.max(F.when(is_c, F.col("has_stats"))).alias(f"{c}__has"),
-            F.max(F.when(is_c, F.col("nulls"))).alias(f"{c}__nulls"),
-            F.max(F.when(is_c, F.col("min_long"))).alias(f"{c}__min_l"),
-            F.max(F.when(is_c, F.col("max_long"))).alias(f"{c}__max_l"),
-            F.max(F.when(is_c, F.col("min_str"))).alias(f"{c}__min_s"),
-            F.max(F.when(is_c, F.col("max_str"))).alias(f"{c}__max_s"),
-            F.first(F.when(is_c, F.col("dict_long")), ignorenulls=True)
-             .alias(f"{c}__dict_l"),
-            F.first(F.when(is_c, F.col("dict_str")), ignorenulls=True)
-             .alias(f"{c}__dict_s"),
-            F.first(F.when(is_c, F.col("bloom")), ignorenulls=True)
-             .alias(f"{c}__bloom"),
-        ]
-    return stats_df.groupBy("path", "block").agg(*aggs)
-
-
-def _bloom_any_probe(hash_pairs: List[tuple], int_values: List[int]):
-    """Arrow-batched UDF: membership binary -> might-contain-any(values),
-    dispatched on the serialization magic (bloom or dense bitmap).
-
-    The probe values' hash PAIRS are precomputed driver-side and baked into
-    the closure; each batch row is k bit tests (bloom) or exact offset bit
-    tests (bitmap) — executor-side, no driver involvement, no hashing in
-    the UDF."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def probe(blooms: pd.Series) -> pd.Series:
-        from parquet_index_spark.statistics import (
-            BloomFilter, BitmapFilter, _BITMAP_MAGIC)
-        out = []
-        for b in blooms:
-            if b is None or len(b) == 0:
-                out.append(True)
-                continue
-            try:
-                raw = bytes(b)
-                if raw[:8] == _BITMAP_MAGIC:
-                    bm = BitmapFilter.from_bytes(raw)
-                    out.append(any(bm.might_contain(v, "long")
-                                   for v in int_values))
-                else:
-                    bf = BloomFilter.from_bytes(raw)
-                    out.append(any(bf.might_contain_pair(h1, h2)
-                                   for h1, h2 in hash_pairs))
-            except ValueError:
-                out.append(True)  # unknown format => scan (sound)
-        return pd.Series(out)
-
-    return probe
-
-
-# (applicationId, blob md5) -> Broadcast, insertion-ordered for
-# eviction: re-compiling the same InBloom (retries, explain + prune,
-# repeated joins on one dim) must not re-broadcast a tens-of-MB blob,
-# and a long-lived session must not accumulate one broadcast per join
-# call (round-9 review). Keyed by the context's applicationId, NOT
-# the CPython id of the session: ids are reused after GC, so a new session could
-# hit a dead session's cache entry and hand its tasks a broadcast from
-# a stopped SparkContext (round-9 ADVICE). A dead app's entries simply
-# age out of the bounded cache. Evicted entries are unpersisted
-# (executor copies drop; the driver can still re-serve an in-flight
-# task).
+# (applicationId, pickled-predicate digest) -> Broadcast, insertion-
+# ordered for eviction: re-folding the same predicate (retries, explain +
+# prune, repeated joins on one dim's multi-MB InBloom) must not
+# re-broadcast it, and a long-lived session must not accumulate one
+# broadcast per call (round-9 review). Keyed by the context's
+# applicationId, NOT the CPython id of the session: ids are reused after
+# GC, so a new session could hit a dead session's entry and hand its
+# tasks a broadcast from a stopped SparkContext (round-9 ADVICE). A dead
+# app's entries simply age out of the bounded cache. Evicted entries are
+# unpersisted (executor copies drop; the driver can still re-serve an
+# in-flight task).
 _BLOB_BROADCASTS: dict = {}
 _BLOB_BROADCASTS_MAX = 4
 
 
-def _dict_vs_filter_probe(blob: bytes):
-    """Arrow-batched UDF: (dict_long, dict_str, filter_blob) ->
-    might-any-value-hit the broadcast dim-key bloom
-    (``predicates.InBloom``, distributed fold side). The blob rides a
-    Spark broadcast (it can be tens of MB for a 10M-key dim — per-task
-    closure shipping would resend it), is deserialized once per python
-    worker, and each dict block costs one vectorized hash pass (longs)
-    / one probe per unique value (strings); bitmap blocks enumerate
-    their exact set bits. Blocks without exact evidence return True
-    (cannot refute — sound)."""
-    import hashlib
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql.functions import pandas_udf
-
-    spark = SparkSession.getActiveSession()
-    key = (spark.sparkContext.applicationId,
-           hashlib.md5(bytes(blob)).hexdigest())
+def _broadcast(sc, pred: P.Predicate):
+    blob = pickle.dumps(pred)
+    key = (sc.applicationId, hashlib.sha1(blob).hexdigest())
     bc = _BLOB_BROADCASTS.get(key)
     if bc is None:
-        bc = spark.sparkContext.broadcast(bytes(blob))
+        bc = sc.broadcast(blob)
         _BLOB_BROADCASTS[key] = bc
         while len(_BLOB_BROADCASTS) > _BLOB_BROADCASTS_MAX:
-            oldest = next(iter(_BLOB_BROADCASTS))
-            old = _BLOB_BROADCASTS.pop(oldest)
+            old = _BLOB_BROADCASTS.pop(next(iter(_BLOB_BROADCASTS)))
             try:
                 old.unpersist(blocking=False)
             except Exception:  # noqa: BLE001 — stopped context
                 pass
-    _cache: dict = {}
-
-    @pandas_udf("boolean")
-    def probe(dl: pd.Series, ds: pd.Series, blob: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from parquet_index_spark.statistics import (_BITMAP_MAGIC,
-                                                    BitmapFilter,
-                                                    BloomFilter)
-        bf = _cache.get("bf")
-        if bf is None:
-            try:
-                bf = BloomFilter.from_bytes(bc.value)
-            except Exception:  # noqa: BLE001 — unknown blob => scan
-                bf = False
-            _cache["bf"] = bf
-        if bf is False:
-            return pd.Series([True] * len(dl))
-        out = []
-        for a, s, b in zip(dl, ds, blob):
-            if a is not None and len(a):
-                out.append(bool(bf.might_contain_longs_vectorized(
-                    np.asarray(a, dtype=np.int64)).any()))
-            elif s is not None and len(s):
-                out.append(any(bf.might_contain(x, ityp.STRING)
-                               for x in set(s)))
-            elif b is not None and bytes(b[:8]) == _BITMAP_MAGIC:
-                # bitmap = exact long-space value set: enumerate the set
-                # bits and probe (same refutation rule as dict)
-                try:
-                    bm = BitmapFilter.from_bytes(bytes(b))
-                except ValueError:
-                    out.append(True)
-                    continue
-                pos = np.nonzero(np.unpackbits(
-                    np.frombuffer(bytes(bm.bits), dtype=np.uint8),
-                    bitorder="little"))[0]
-                pos = pos[pos < bm.num_bits]
-                out.append(bool(len(pos)) and bool(
-                    bf.might_contain_longs_vectorized(
-                        (bm.vmin + pos).astype(np.int64)).any()))
-            else:
-                out.append(True)
-        return pd.Series(out)
-
-    return probe
+    return bc
 
 
-def _membership_ok(col: str, kind: str, values: list) -> F.Column:
-    """Dict/bloom refinement for Eq/In over already-normalized values.
-
-    dict: arrays_overlap against the literal array (whole-stage codegen);
-    bloom: pandas-UDF probe; no filter: pass (sound)."""
-    int_vals = [v for v in values if not isinstance(v, str)]
-    str_vals = [v for v in values if isinstance(v, str)]
-    dl, ds = F.col(f"{col}__dict_l"), F.col(f"{col}__dict_s")
-    bloom = F.col(f"{col}__bloom")
-    has_dl = dl.isNotNull() & (F.size(dl) > 0)
-    has_ds = ds.isNotNull() & (F.size(ds) > 0)
-    dl_ok = F.arrays_overlap(
-        dl, F.array(*[F.lit(int(v)) for v in int_vals]).cast("array<bigint>")) \
-        if int_vals else F.lit(False)
-    ds_ok = F.arrays_overlap(
-        ds, F.array(*[F.lit(v) for v in str_vals])) if str_vals else F.lit(False)
-    from parquet_index_spark.statistics import hash_pair_for
-    pairs = [hash_pair_for(v, kind) for v in values]
-    bloom_ok = _bloom_any_probe(pairs, int_vals)(bloom)
-    return (F.when(has_dl, dl_ok)
-            .when(has_ds, ds_ok)
-            .when(bloom.isNotNull(), bloom_ok)
-            .otherwise(F.lit(True)))
+def _shippable(pred: P.Predicate) -> P.Predicate:
+    """The fold-relevant tree: NOT pushed down and every Unsupported
+    leaf stripped of its residual builder (a Spark Column closure that
+    cannot leave the driver and that the fold never calls)."""
+    if isinstance(pred, (P.And, P.Or)):
+        return type(pred)(tuple(_shippable(c) for c in pred.children))
+    if isinstance(pred, P.Unsupported):
+        return P.Unsupported(None, pred.description)
+    return pred
 
 
-def _leaf(col: str, kind: str, op: str, value, tz: str = None) -> F.Column:
-    """Boolean Column for one comparison leaf over the pivoted stats."""
-    try:
-        v = ityp.literal_to_stat_value(value, kind, tz)
-    except (TypeError, ValueError, KeyError):
-        return F.lit(True)
-    if v is None:
-        return F.lit(True)
-    has = F.coalesce(F.col(f"{col}__has"), F.lit(False))
-    # statless-but-maybe-nonnull blocks keep (numpy fold's _statless_maybe):
-    # no min/max AND not known all-null => pruning would be unsound
-    nulls = F.coalesce(F.col(f"{col}__nulls"), F.lit(-1))
-    statless = ~has & (nulls != F.col("__rows"))
-    if kind == ityp.STRING:
-        mn, mx = F.col(f"{col}__min_s"), F.col(f"{col}__max_s")
-    else:
-        mn, mx = F.col(f"{col}__min_l"), F.col(f"{col}__max_l")
-    lit = F.lit(v)
-    table = {
-        "eq": has & (mn <= lit) & (lit <= mx),
-        "ne": has & ~((mn == lit) & (mx == lit)),
-        "gt": has & (mx > lit),
-        "ge": has & (mx >= lit),
-        "lt": has & (mn < lit),
-        "le": has & (mn <= lit),
-    }
-    return F.coalesce(table[op], F.lit(False)) | statless
+def _fold_shard(shard: str, paths: list, partition_json: list,
+                index_columns: dict, partition_columns: dict,
+                block_rows_of: list, blob, tz: str, column,
+                bands: bool) -> list:
+    """Executor side: one stats shard through the driver's fold, over
+    the stats rows of the ``block_rows_of`` columns only.
+    -> surviving paths, or per-file partials when ``bands``."""
+    import pyarrow.parquet as pq
+
+    from parquet_index_spark.metastore import build_context
+
+    read_cols = None if index_columns else ["path", "block", "rows",
+                                            "column"]
+    stats = pq.read_table(shard, columns=read_cols,
+                          filters=[("column", "in", block_rows_of)]
+                          ).to_pandas()
+    ctx = build_context(stats, index_columns, partition_columns, paths,
+                        partition_json)
+    pred = None if blob is None else pickle.loads(blob.value)
+    if bands:
+        return pruning.file_partials(pred, ctx, tz, column)
+    return pruning.prune_files(pred, ctx, tz)
 
 
-def compile_to_spark(pred: P.Predicate, kinds: dict, tz: str = None,
-                     memb_cols: frozenset = frozenset()) -> F.Column:
-    """AST -> boolean Column with the pruning fold semantics, including
-    dict/bloom membership refinement for the columns in ``memb_cols``
-    (those whose pivoted frame carries __dict_l/__dict_s/__bloom; partition
-    pseudo-columns don't). ``kinds``: indexed/partition column -> kind;
-    ``tz``: session timezone for instant-timestamp literal localization."""
-    pred = P.push_not_down(pred)
-    return _compile(pred, kinds, tz, memb_cols)
+def _run(spark: SparkSession, metadata, pred, tz, column=None,
+         bands=True) -> list:
+    """One task per stats shard; the tasks' results concatenated."""
+    from parquet_index_spark import collector
 
-
-def _compile(pred: P.Predicate, kinds: dict, tz: str = None,
-             memb_cols: frozenset = frozenset()) -> F.Column:
-    if isinstance(pred, P.And):
-        out = F.lit(True)
-        for c in pred.children:
-            out = out & _compile(c, kinds, tz, memb_cols)
-        return out
-    if isinstance(pred, P.Or):
-        out = F.lit(False)
-        for c in pred.children:
-            out = out | _compile(c, kinds, tz, memb_cols)
-        return out
-    if isinstance(pred, P.Trivial):
-        return F.lit(pred.value)
-    if isinstance(pred, (P.Unsupported, P.Not)):
-        return F.lit(True)
-    if isinstance(pred, P.TermMatch):
-        # term index: membership over the block's distinct tokens; a
-        # table without a term index (column absent) soundly scans
-        if not pred.term.strip():
-            return F.lit(True)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            tcol = pred.column + suf
-            if tcol in kinds and tcol in memb_cols:
-                return _membership_ok(tcol, ityp.STRING, [pred.term])
-        return F.lit(True)
-    if isinstance(pred, P.TermPrefixMatch):
-        # token-prefix probe against the term dict (bloom: no evidence)
-        p = pred.prefix
-        if not p.strip():
-            return F.lit(True)
-        for suf in (P.TERMS2_SUFFIX, P.TERMS_SUFFIX):
-            tcol = pred.column + suf
-            if tcol in kinds and tcol in memb_cols:
-                ds = F.col(f"{tcol}__dict_s")
-                has_ds = ds.isNotNull() & (F.size(ds) > 0)
-                ds_ok = F.exists(ds, lambda x: x.startswith(F.lit(p)))
-                return F.when(has_ds, ds_ok).otherwise(F.lit(True))
-        return F.lit(True)
-
-    kind = kinds.get(getattr(pred, "column", None))
-    if kind is None:
-        return F.lit(True)
-    c = pred.column
-    if isinstance(pred, P.InBloom):
-        # reverse membership probe (dpp_join's big-dim tier): blocks
-        # whose exact DICT values all miss the dim-key bloom are
-        # refuted; everything else (bloom/bitmap/no filter) scans
-        if c not in memb_cols:
-            return F.lit(True)
-        return _dict_vs_filter_probe(pred.blob)(
-            F.col(f"{c}__dict_l"), F.col(f"{c}__dict_s"),
-            F.col(f"{c}__bloom"))
-    if isinstance(pred, P.Eq):
-        rng = _leaf(c, kind, "eq", pred.value, tz)
-        if c not in memb_cols:
-            return rng
-        try:
-            v = ityp.literal_to_stat_value(pred.value, kind, tz)
-        except (TypeError, ValueError, KeyError):
-            return rng
-        return rng if v is None else rng & _membership_ok(c, kind, [v])
-    if isinstance(pred, P.Ne):
-        return _leaf(c, kind, "ne", pred.value, tz)
-    if isinstance(pred, P.In):
-        if not pred.values:
-            return F.lit(False)
-        out = F.lit(False)
-        vs = []
-        for v in pred.values:
-            try:
-                nv = ityp.literal_to_stat_value(v, kind, tz)
-            except (TypeError, ValueError, KeyError):
-                nv = None
-            if nv is None:
-                # un-coercible literal => conservative scan, matching the
-                # numpy fold (partial range ORs would be unsound)
-                return F.lit(True)
-            vs.append(nv)
-            out = out | _leaf(c, kind, "eq", v, tz)
-        if c in memb_cols and vs:
-            out = out & _membership_ok(c, kind, vs)
-        return out
-    if isinstance(pred, P.IsNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return (nulls > 0) | (nulls == -1)
-    if isinstance(pred, P.IsNotNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return F.when(nulls >= 0, F.col("__rows") - nulls > 0) \
-            .otherwise(F.col("__rows") > 0)
-    if isinstance(pred, P.Gt):
-        return _leaf(c, kind, "gt", pred.value, tz)
-    if isinstance(pred, P.Ge):
-        return _leaf(c, kind, "ge", pred.value, tz)
-    if isinstance(pred, P.Lt):
-        return _leaf(c, kind, "lt", pred.value, tz)
-    if isinstance(pred, P.Le):
-        return _leaf(c, kind, "le", pred.value, tz)
-    if isinstance(pred, P.StartsWith):
-        # prefix interval [p, prefix_upper_bound(p)) against string
-        # min/max, with string-dict refinement (pruning._eval's
-        # StartsWith rule, distributed)
-        if kind != ityp.STRING:
-            return F.lit(True)
-        p = pred.prefix
-        has = F.coalesce(F.col(f"{c}__has"), F.lit(False))
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        statless = ~has & (nulls != F.col("__rows"))
-        rng = has & (F.col(f"{c}__max_s") >= F.lit(p))
-        hi = P.prefix_upper_bound(p)
-        if hi is not None:
-            rng = rng & (F.col(f"{c}__min_s") < F.lit(hi))
-        out = F.coalesce(rng, F.lit(False)) | statless
-        if p and c in memb_cols:
-            ds = F.col(f"{c}__dict_s")
-            has_ds = ds.isNotNull() & (F.size(ds) > 0)
-            ds_ok = F.exists(ds, lambda x: x.startswith(F.lit(p)))
-            out = out & F.when(has_ds, ds_ok).otherwise(F.lit(True))
-        return out
-    return F.lit(True)
-
-
-def _manifest_df(spark: SparkSession, metadata):
-    """The committed file manifest as a 1-column DataFrame for in-job
-    orphan filtering (manifest is the commit point; stats rows for paths
-    outside it are leftovers from an interrupted refresh)."""
-    return spark.createDataFrame(
-        [(p,) for p in metadata.files["path"]], "path string")
-
-
-def _prepare_pivot(spark: SparkSession, metadata, referenced: set,
-                   tz: str = None):
-    """Shared front half of every distributed fold: read the stats
-    parquet, pivot the referenced columns wide per (path, block), and
-    join partition values in as exact pseudo-stats (mirroring the numpy
-    context, metastore.IndexMetadata._build_context).
-
-    -> (pivoted | None, kinds, memb_cols); None when the index has no
-    stats shards (empty table)."""
-    import json
-
-    stats_path = os.path.join(metadata.index_dir, "stats")
-    has_shards = os.path.isdir(stats_path) and any(
-        f.endswith(".parquet") for f in os.listdir(stats_path))
-    if not has_shards:
-        return None, {}, frozenset()
-    stats_df = spark.read.parquet(stats_path)
-
-    kinds = {c: k for c, k in metadata.index_columns.items() if c in referenced}
-    pivoted = _pivot_stats(stats_df, sorted(kinds))
-
-    # instant-timestamp partition values are wall-clock directory strings;
-    # fold them in wall space (NTZ) so no session-tz localization applies
-    part_kinds = {c: (ityp.TIMESTAMP_NTZ if k == ityp.TIMESTAMP else k)
-                  for c, k in metadata.partition_columns.items()
-                  if c in referenced}
-    if part_kinds:
-        rows = []
-        for rec in metadata.files.to_dict("records"):
-            pv = json.loads(rec["partition_json"])
-            row = {"path": rec["path"]}
-            for c, k in part_kinds.items():
-                raw = pv.get(c)
-                row[f"{c}__pv"] = None if raw in (None, "__HIVE_DEFAULT_PARTITION__") \
-                    else ityp.parse_partition_value(raw, k)
-            rows.append(row)
-        pf = spark.createDataFrame(rows)
-        pivoted = pivoted.join(F.broadcast(pf), "path", "left")
-        for c, k in part_kinds.items():
-            pv = F.col(f"{c}__pv")
-            pivoted = (pivoted
-                       .withColumn(f"{c}__has", pv.isNotNull())
-                       .withColumn(f"{c}__nulls",
-                                   F.when(pv.isNull(), F.col("__rows"))
-                                   .otherwise(F.lit(0)))
-                       .withColumn(f"{c}__min_l" if k != ityp.STRING else f"{c}__min_s", pv)
-                       .withColumn(f"{c}__max_l" if k != ityp.STRING else f"{c}__max_s", pv))
-        kinds.update(part_kinds)
-    memb_cols = frozenset(c for c in kinds if c in metadata.index_columns)
-    return pivoted, kinds, memb_cols
+    stats_dir = os.path.join(metadata.index_dir, "stats")
+    shards = sorted(os.path.join(stats_dir, f)
+                    for f in (os.listdir(stats_dir)
+                              if os.path.isdir(stats_dir) else ())
+                    if f.endswith(".parquet"))
+    if not shards:
+        return []  # empty table: no stats shards written
+    if pred is not None:
+        pred = _shippable(P.push_not_down(pred))
+    ref = P.referenced_columns(pred) if pred is not None else set()
+    if column:
+        ref.add(column)
+    idx = {c: k for c, k in metadata.index_columns.items() if c in ref}
+    parts = {c: k for c, k in metadata.partition_columns.items()
+             if c in ref}
+    # one stats row per block per indexed column: a partition-only
+    # predicate still reads one indexed column's rows for the blocks
+    block_rows_of = list(idx) or sorted(metadata.index_columns)[:1]
+    paths = list(metadata.files["path"])
+    pjson = list(metadata.files["partition_json"]) if parts else None
+    sc = spark.sparkContext
+    collector._ensure_package_shipped(spark)
+    blob = None if pred is None else _broadcast(sc, pred)
+    return sc.parallelize(shards, len(shards)).flatMap(
+        lambda s: _fold_shard(s, paths, pjson, idx, parts, block_rows_of,
+                              blob, tz, column, bands)).collect()
 
 
 def prune_files_with_spark(spark: SparkSession, metadata,
                            pred: P.Predicate, tz: str = None) -> List[str]:
-    """Distributed equivalent of pruning.prune_files (minus membership).
-
-    Partition-column predicates are folded too: partition values join in
-    from the file manifest as exact pseudo-stats, mirroring the numpy
-    context (metastore.IndexMetadata._build_context).
-    """
-    pivoted, kinds, memb_cols = _prepare_pivot(
-        spark, metadata, P.referenced_columns(pred), tz)
-    if pivoted is None:
-        return []
-    # ensure every referenced-but-missing stat column exists (unindexed
-    # columns were already folded to True at compile time)
-    match = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
-    survivors = (pivoted.withColumn("__match", match)
-                 .groupBy("path")
-                 .agg(F.max(F.col("__match").cast("int")).alias("m"))
-                 .filter("m = 1")
-                 .select("path"))
-    manifest = set(metadata.files["path"])
-    # drop orphan stats paths from an interrupted refresh (manifest is the
-    # commit point — same tolerance as the numpy fold's _build_context)
-    return [r["path"] for r in survivors.collect() if r["path"] in manifest]
-
-
-# ---------------------------------------------------------------------------
-# Distributed full-match fold + metadata aggregation jobs
-# ---------------------------------------------------------------------------
-# The Spark-side mirror of pruning.evaluate_full, so count_where /
-# min_max_where keep their metadata acceleration when the metadata itself
-# outgrows the driver fold — which at 100 TB is the NORMAL case, exactly
-# where a metadata-answered aggregate matters most. Same soundness
-# direction: False whenever the stats cannot prove the predicate.
-# Membership filters are irrelevant here (a bloom/dict can prove absence,
-# never that every row matches).
-
-
-def _full_leaf(col: str, kind: str, op: str, value, tz: str = None) -> F.Column:
-    """Full-match Column for one comparison leaf over the pivoted stats."""
-    try:
-        v = ityp.literal_to_stat_value(value, kind, tz)
-    except (TypeError, ValueError, KeyError):
-        return F.lit(False)
-    if v is None:
-        return F.lit(False)
-    has = F.coalesce(F.col(f"{col}__has"), F.lit(False))
-    nulls = F.coalesce(F.col(f"{col}__nulls"), F.lit(-1))
-    nn0 = has & (nulls == 0)
-    if kind == ityp.STRING:
-        mn, mx = F.col(f"{col}__min_s"), F.col(f"{col}__max_s")
-    else:
-        mn, mx = F.col(f"{col}__min_l"), F.col(f"{col}__max_l")
-    lit = F.lit(v)
-    table = {
-        "eq": (mn == lit) & (mx == lit),
-        "ne": (mx < lit) | (mn > lit),
-        "gt": mn > lit,
-        "ge": mn >= lit,
-        "lt": mx < lit,
-        "le": mx <= lit,
-    }
-    return F.coalesce(nn0 & table[op], F.lit(False))
-
-
-def compile_full_to_spark(pred: P.Predicate, kinds: dict,
-                          tz: str = None) -> F.Column:
-    """AST -> boolean Column "every row of the block satisfies pred"."""
-    pred = P.push_not_down(pred)
-    return _compile_full(pred, kinds, tz)
-
-
-def _compile_full(pred: P.Predicate, kinds: dict, tz: str = None) -> F.Column:
-    if isinstance(pred, P.And):
-        out = F.lit(True)
-        for c in pred.children:
-            out = out & _compile_full(c, kinds, tz)
-        return out
-    if isinstance(pred, P.Or):
-        out = F.lit(False)
-        for c in pred.children:
-            out = out | _compile_full(c, kinds, tz)
-        return out
-    if isinstance(pred, P.Trivial):
-        return F.lit(pred.value)
-    if isinstance(pred, (P.Unsupported, P.Not, P.TermMatch,
-                         P.TermPrefixMatch)):
-        return F.lit(False)  # term membership can never prove full-match
-    kind = kinds.get(getattr(pred, "column", None))
-    if kind is None:
-        return F.lit(False)
-    c = pred.column
-    if isinstance(pred, P.IsNull):
-        nulls = F.coalesce(F.col(f"{c}__nulls"), F.lit(-1))
-        return nulls == F.col("__rows")  # -1 never equals rows >= 0
-    if isinstance(pred, P.IsNotNull):
-        return F.coalesce(F.col(f"{c}__nulls"), F.lit(-1)) == 0
-    if isinstance(pred, P.Eq):
-        return _full_leaf(c, kind, "eq", pred.value, tz)
-    if isinstance(pred, P.Ne):
-        return _full_leaf(c, kind, "ne", pred.value, tz)
-    if isinstance(pred, P.In):
-        out = F.lit(False)
-        for v in pred.values:
-            out = out | _full_leaf(c, kind, "eq", v, tz)
-        return out
-    if isinstance(pred, P.Gt):
-        return _full_leaf(c, kind, "gt", pred.value, tz)
-    if isinstance(pred, P.Ge):
-        return _full_leaf(c, kind, "ge", pred.value, tz)
-    if isinstance(pred, P.Lt):
-        return _full_leaf(c, kind, "lt", pred.value, tz)
-    if isinstance(pred, P.Le):
-        return _full_leaf(c, kind, "le", pred.value, tz)
-    if isinstance(pred, P.StartsWith):
-        # all-prefix block: [min, max] inside [p, prefix_upper_bound(p))
-        # with zero nulls (pruning._eval_full's StartsWith rule)
-        if kind != ityp.STRING:
-            return F.lit(False)
-        has = F.coalesce(F.col(f"{c}__has"), F.lit(False))
-        nn0 = has & (F.coalesce(F.col(f"{c}__nulls"), F.lit(-1)) == 0)
-        out = nn0 & (F.col(f"{c}__min_s") >= F.lit(pred.prefix))
-        hi = P.prefix_upper_bound(pred.prefix)
-        if hi is not None:
-            out = out & (F.col(f"{c}__max_s") < F.lit(hi))
-        return F.coalesce(out, F.lit(False))
-    return F.lit(False)
+    """Distributed pruning.prune_files: surviving files, manifest order."""
+    keep = set(_run(spark, metadata, pred, tz, bands=False))
+    return [p for p in metadata.files["path"] if p in keep]
 
 
 def count_files_with_spark(spark: SparkSession, metadata,
                            pred: P.Predicate, tz: str = None):
-    """Distributed three-band count decomposition.
-
-    -> (meta_count, boundary_paths): exact row total of files proven
-    all-FULL by the fold, plus the file list that must be scanned with
-    the residual predicate. One Spark aggregation over the stats parquet;
-    only the boundary path list (bounded: these files get scanned anyway)
-    and one long reach the driver."""
-    pivoted, kinds, memb_cols = _prepare_pivot(
-        spark, metadata, P.referenced_columns(pred), tz)
-    if pivoted is None:
-        return 0, []
-    may = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
-    full = compile_full_to_spark(pred, kinds, tz)
-    per_path = (pivoted
-                .withColumn("__may", may).withColumn("__full", full)
-                .groupBy("path")
-                .agg(F.max((F.col("__may") & ~F.col("__full"))
-                           .cast("int")).alias("b"),
-                     F.sum(F.when(F.col("__full"), F.col("__rows"))
-                           .otherwise(F.lit(0))).alias("fr")))
-    # manifest join runs IN the job (orphan stats from an interrupted
-    # refresh must not count), and the full-file total is aggregated
-    # in-job too: only one long and the boundary path list (bounded —
-    # these files get scanned anyway) ever reach the driver
-    per_path = per_path.join(F.broadcast(_manifest_df(spark, metadata)),
-                             "path", "inner")
-    row = per_path.agg(
-        F.sum(F.when(F.col("b") == 0, F.col("fr"))
-              .otherwise(F.lit(0))).alias("meta"),
-        F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("bp")
-    ).head()
-    return int(row["meta"] or 0), sorted(row["bp"])
+    """Distributed three-band count decomposition -> (meta_count,
+    boundary_paths): rows of files proven all-FULL, plus the files to
+    scan with the residual predicate."""
+    rows, _lo, _hi, scan = pruning.finish_partials(
+        pruning.merge_partials(_run(spark, metadata, pred, tz)))
+    return rows, scan
 
 
 def min_max_files_with_spark(spark: SparkSession, metadata, column: str,
                              pred: P.Predicate = None, tz: str = None):
-    """Distributed three-band min/max decomposition for ``column``.
-
-    -> (lo, hi, scan_paths) with lo/hi in STAT space (long or str, None
-    when metadata alone proves nothing). Files needing a scan: boundary
-    blocks, or full-match blocks whose stats for ``column`` are absent
-    yet possibly non-null."""
-    referenced = set(P.referenced_columns(pred)) if pred is not None else set()
-    referenced.add(column)
-    pivoted, kinds, memb_cols = _prepare_pivot(spark, metadata, referenced, tz)
-    if pivoted is None:
-        return None, None, []
-    if pred is None:
-        may = F.lit(True)
-        full = F.lit(True)
-    else:
-        may = compile_to_spark(pred, kinds, tz, memb_cols=memb_cols)
-        full = compile_full_to_spark(pred, kinds, tz)
-    kind = kinds.get(column)
-    if kind is None:
-        # agg column not indexed: nothing provable, scan all may-files
-        survivors = (pivoted.withColumn("__may", may)
-                     .groupBy("path")
-                     .agg(F.max(F.col("__may").cast("int")).alias("m"))
-                     .filter("m = 1").select("path")
-                     .join(F.broadcast(_manifest_df(spark, metadata)),
-                           "path", "inner"))
-        return None, None, sorted(r["path"] for r in survivors.collect())
-    has = F.coalesce(F.col(f"{column}__has"), F.lit(False))
-    nulls = F.coalesce(F.col(f"{column}__nulls"), F.lit(-1))
-    statless = ~has & (nulls != F.col("__rows"))
-    scan_block = (may & ~full) | (full & statless)
-    suffix = "_s" if kind == ityp.STRING else "_l"
-    mn_col, mx_col = F.col(f"{column}__min{suffix}"), F.col(f"{column}__max{suffix}")
-    meta_ok = full & has
-    per_path = (pivoted
-                .withColumn("__scan", scan_block)
-                .groupBy("path")
-                .agg(F.max(F.col("__scan").cast("int")).alias("b"),
-                     F.min(F.when(meta_ok, mn_col)).alias("mn"),
-                     F.max(F.when(meta_ok, mx_col)).alias("mx"))
-                .join(F.broadcast(_manifest_df(spark, metadata)),
-                      "path", "inner"))
-    # single in-job aggregation: extremes over clean (non-scanned) files
-    # plus the bounded boundary path list; nothing per-file reaches the
-    # driver for the metadata-answered portion
-    row = per_path.agg(
-        F.min(F.when(F.col("b") == 0, F.col("mn"))).alias("lo"),
-        F.max(F.when(F.col("b") == 0, F.col("mx"))).alias("hi"),
-        F.collect_list(F.when(F.col("b") == 1, F.col("path"))).alias("sp")
-    ).head()
-    return row["lo"], row["hi"], sorted(row["sp"])
+    """Distributed three-band min/max decomposition for ``column`` ->
+    (lo, hi, scan_paths), lo/hi in stat space (None when metadata alone
+    proves nothing)."""
+    _rows, lo, hi, scan = pruning.finish_partials(
+        pruning.merge_partials(_run(spark, metadata, pred, tz, column)))
+    return lo, hi, scan

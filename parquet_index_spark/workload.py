@@ -42,7 +42,7 @@ def _session_ctx(spark: SparkSession) -> QueryContext:
     NOT the CPython id of the session: ids are reused after GC, so a dead
     session's entry could be served to a NEW session that happens to
     land on the same id (round-10 verdict — the same hazard class fixed
-    in pruning_spark's InBloom broadcast cache). applicationId is fresh
+    in pruning_spark's predicate broadcast cache). applicationId is fresh
     per SparkContext, so a restarted session always gets a fresh
     QueryContext. Entries of dead applications are dropped on the next
     insert (one context per process: a new applicationId means every
@@ -6622,35 +6622,57 @@ CHANGED_HEAD = [
     "stream_merge_upsert", "idx_delete_range", "idx_update_range",
     "idx_delete_partitioned",
 ]
-_R16_WINDOW = CHANGED_HEAD + [
-    # oldest-proven-first rotation (tools/rotate_window.py): the
-    # r13-stale queries lead the fill, advancing the oldest-green
-    # round r12 -> r13 (r15 verdict ask #8), then the next-stalest;
-    # ties break by name for a deterministic, re-derivable order
-    "ann_cosine_topk", "bm25_search", "dedup_keep_best",
-    "doc_fingerprints", "ks_drift_doclen", "profile_orders_columns",
-    "q19_disjunctive_predicates", "simhash_fingerprints",
-    "text_profile_by_lang", "tfidf_top_terms", "token_count_stats",
-    "ann_topk_per_label", "approx_percentile_bounds",
-    "asof_join_events", "cohort_retention", "cube_order_status",
-    "distinct_parts_per_flag", "earliest_events_per_user",
-    "first_urls_per_lang", "float_rank_docs_per_lang",
-    "idx_bitmap_point", "idx_column_predicate", "idx_events_point",
-    "idx_in_or_composite", "idx_join_dpp", "idx_not_range",
-    "idx_orders_priority", "idx_phrase_search", "idx_range_scan",
-    "idx_refresh_rewrite", "idx_term_decontamination",
-    "idx_term_prefix_search", "idx_term_search", "ivf_ann_topk",
-    "latest_events_per_user", "listagg_status_by_priority",
-    "lsh_bucket_histogram", "overlap_join_windows",
-]
+def latest_green_rounds(repo: str) -> dict:
+    """query -> the newest round whose committed driver capture
+    (``CORRECTNESS_r<N>.json`` under ``repo``) shows it green."""
+    import glob
+    import json
+    import re
+
+    latest: dict = {}
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+        m = re.search(r"r(\d+)", os.path.basename(path))
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, ValueError):
+            continue
+        queries = data.get("queries", data)
+        if not isinstance(queries, dict):
+            continue
+        for name, row in queries.items():
+            if not isinstance(row, dict):
+                continue
+            ok = row.get("hash_match",
+                         row.get("match", row.get("rows_match")))
+            if ok:
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
+
+
+def _grading_window() -> list:
+    """CHANGED_HEAD, then the fill: oldest-proven-first over the
+    committed driver captures (never-graded queries first of all), ties
+    broken by registry order."""
+    latest = latest_green_rounds(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    rest = [k for k in QUERIES if k not in CHANGED_HEAD]
+    fill = sorted(rest, key=lambda q: latest.get(q, 0))  # stable
+    return CHANGED_HEAD + fill[:50 - len(CHANGED_HEAD)]
+
+
+_WINDOW = _grading_window()
 # the driver grades the FIRST 50 keys — a window longer than 50 would
 # silently push its tail out of grading (round-11 review: the three new
 # rank-cut queries grew the head past 50 before the fill was trimmed).
 # Explicit raise, not assert: python -O strips asserts, which would
 # disable exactly the silent-truncation guard this line exists for.
-if len(_R16_WINDOW) != 50:
+if len(_WINDOW) != 50:
     raise RuntimeError(
         f"grading window must be exactly 50 entries, got "
-        f"{len(_R16_WINDOW)} — the driver grades only the first 50")
-QUERIES = {**{k: QUERIES[k] for k in _R16_WINDOW},
-           **{k: v for k, v in QUERIES.items() if k not in _R16_WINDOW}}
+        f"{len(_WINDOW)} — the driver grades only the first 50")
+QUERIES = {**{k: QUERIES[k] for k in _WINDOW},
+           **{k: v for k, v in QUERIES.items() if k not in _WINDOW}}

@@ -1,8 +1,8 @@
-"""Distributed (Spark-job) pruning path: equivalence with the numpy fold.
+"""Spark-job pruning route: equivalence with the driver's numpy fold.
 
-Round 2: the Spark path applies membership (dict/bloom) refinement too —
-dict via arrays_overlap, bloom via a batched pandas UDF — so with or
-without filter statistics the two paths' survivor sets must be identical.
+The Spark route runs the driver's own fold per stats shard, membership
+(dict/bloom/bitmap) refinement included, so with or without filter
+statistics the two routes' survivor sets must be identical.
 """
 
 import os
@@ -76,6 +76,8 @@ PREDICATES = [
     "s LIKE 's0900%'",
     "s LIKE 'zz%'",
     "NOT (s LIKE 's0%')",
+    "grp = 2",
+    "grp IN (1, 3)",
 ]
 
 
@@ -132,6 +134,77 @@ class TestSparkPruningEquivalence:
                 spark.read.parquet(table).filter("grp = 1 AND id < 500"))
         finally:
             spark.conf.unset(SPARK_PRUNING_THRESHOLD)
+
+    def test_malformed_threshold_names_the_key(self, spark, tctx, table):
+        """A non-integer threshold is a configuration error, not a
+        silent fallback to the default."""
+        t = tctx.index.parquet(table)
+        spark.conf.set(SPARK_PRUNING_THRESHOLD, "5M")
+        try:
+            with pytest.raises(ValueError, match=SPARK_PRUNING_THRESHOLD):
+                t.filter("id = 5")
+            with pytest.raises(ValueError, match=SPARK_PRUNING_THRESHOLD):
+                t.count_where("id = 5")
+        finally:
+            spark.conf.unset(SPARK_PRUNING_THRESHOLD)
+
+
+def test_compaction_keeps_each_file_in_one_shard(spark, ctx,
+                                                 tmp_table_dir):
+    """Compacted stats shards hold each file's rows whole, and the
+    Spark-job fold over them prunes, counts and finds min/max exactly as
+    the driver fold does."""
+    import pyarrow.parquet as pq
+
+    from parquet_index_spark.metastore import STATS_DIR
+
+    path = os.path.join(tmp_table_dir, "compacted")
+    (spark.range(0, 4000)
+     .selectExpr("id", "concat('s', lpad(cast(id as string), 5, '0')) AS s")
+     .repartitionByRange(16, "id").write.parquet(path))
+    keys = ("spark.sql.index.partitions",
+            "spark.sql.index.parquet.refresh.maxShards")
+    spark.conf.set(keys[0], "16")
+    spark.conf.set(keys[1], "4")
+    try:
+        ctx.index.create.indexBy("id", "s").parquet(path)
+        spark.range(4000, 4100).selectExpr(
+            "id", "concat('s', cast(id as string)) AS s").coalesce(1) \
+            .write.mode("append").parquet(path)
+        out = ctx.index.refresh.parquet(path)
+    finally:
+        for k in keys:
+            spark.conf.unset(k)
+    assert out["shards_after"] < out["shards_before"], out
+    t = ctx.index.parquet(path)
+    stats_dir = os.path.join(t._metadata.index_dir, STATS_DIR)
+    shards = [f for f in os.listdir(stats_dir) if f.endswith(".parquet")]
+    assert len(shards) > 1, shards
+    seen: dict = {}
+    for f in shards:
+        for p in set(pq.read_table(os.path.join(stats_dir, f),
+                                   columns=["path"]).column(0).to_pylist()):
+            seen.setdefault(p, []).append(f)
+    assert len(seen) == 17
+    assert all(len(v) == 1 for v in seen.values()), seen
+
+    def folds(pred, prune):
+        files = set(prune(parse_sql_predicate(pred)))
+        count = t.count_where(pred)
+        count_scanned = ctx.index.last_prune_info.selected_files
+        return (files, count, count_scanned, t.min_max_where("id", pred),
+                t.min_max_where("s", pred))
+
+    for pred in ("id >= 1000 AND id < 3000", "s = 's00042'",
+                 "id = 4050 OR s < 's00100'"):
+        want = folds(pred, lambda a: prune_files(a, t._metadata.context()))
+        spark.conf.set(SPARK_PRUNING_THRESHOLD, "0")
+        try:
+            got = folds(pred, lambda a: prune_files_with_spark(
+                spark, t._metadata, a))
+        finally:
+            spark.conf.unset(SPARK_PRUNING_THRESHOLD)
+        assert got == want, pred
 
 
 @pytest.fixture(scope="module")
@@ -191,17 +264,19 @@ class TestSparkPruningMembership:
         spark_files = set(prune_files_with_spark(spark, metadata, ast))
         assert spark_files == numpy_files
 
-    @pytest.mark.parametrize("filtered_table", ["bloom"], indirect=True)
+    @pytest.mark.parametrize("filtered_table", ["dict"], indirect=True)
     def test_membership_actually_refines(self, spark, tctx, filtered_table):
         """A point lookup must prune MORE than the min/max range alone
         (the round-1 Spark path returned every range-overlapping file)."""
+        from parquet_index_spark.pruning import BlockStatsContext
         metadata = tctx.index.parquet(filtered_table)._metadata
-        # s is a unique-per-row string: range stats overlap for sorted data,
-        # so with 8 range-partitioned files min/max prunes to 1 anyway; use
-        # an id probe far outside block ranges? Instead compare against the
-        # no-membership compile: survivors with membership <= without.
-        from parquet_index_spark.pruning_spark import compile_to_spark  # noqa: F401
-        ast = parse_sql_predicate("id IN (17, 4242)")
-        with_m = set(prune_files_with_spark(spark, metadata, ast))
-        numpy_files = set(prune_files(ast, metadata.context()))
-        assert with_m == numpy_files
+        # inside one file's [min, max] of s, yet absent from it: only the
+        # dict filter can refute that file
+        ast = parse_sql_predicate("s = 's00042x'")
+        ctx = metadata.context()
+        range_only = BlockStatsContext(ctx.n, ctx.rows, ctx.file_ids,
+                                       ctx.file_paths, ctx.columns)
+        range_files = set(prune_files(ast, range_only))
+        spark_files = set(prune_files_with_spark(spark, metadata, ast))
+        assert range_files
+        assert len(spark_files) < len(range_files)

@@ -1,69 +1,12 @@
-"""Compute the next round's graded-window rotation.
+"""Grading-window rotation inputs.
 
 The driver grades the FIRST 50 keys of ``workload.QUERIES``; the rotation
-policy (round-5 verdict ask #6) is oldest-proven-first: entries whose
-latest green driver row is oldest lead, never-driver-graded entries
-(new this round) first of all. This tool derives that order from the
-committed CORRECTNESS_r*.json captures and prints a ready-to-paste
-``_R6_WINDOW``-style python literal — run it at the START of a round,
-paste the list over the previous ``_R*_WINDOW`` in workload.py, and put
-the round's new queries at the head as they land.
-
-Usage: python tools/rotate_window.py [window_size]
+policy (round-5 verdict ask #6) is oldest-proven-first. ``workload.py``
+derives the window at import time from the committed
+``CORRECTNESS_r*.json`` captures through ``latest_green_rounds``, which
+this module re-exports for tests and ad-hoc inspection.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
-import sys
-
-
-def latest_green_rounds(repo: str) -> dict:
-    latest: dict = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)", os.path.basename(path))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        queries = data.get("queries", data)
-        if not isinstance(queries, dict):
-            continue
-        for name, row in queries.items():
-            if not isinstance(row, dict):
-                continue
-            ok = row.get("hash_match",
-                         row.get("match", row.get("rows_match")))
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
-
-
-def rotation(window_size: int = 50) -> list:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    from parquet_index_spark.workload import QUERIES
-    latest = latest_green_rounds(repo)
-    keys = list(QUERIES)
-    order = sorted(keys, key=lambda q: (latest.get(q, 0), keys.index(q)))
-    return order[:window_size]
-
-
-def main() -> None:
-    size = int(sys.argv[1]) if len(sys.argv) > 1 else 50
-    window = rotation(size)
-    print("_R?_WINDOW = [")
-    for i in range(0, len(window), 3):
-        print("    " + " ".join(f'"{q}",' for q in window[i:i + 3]))
-    print("]")
-
-
-if __name__ == "__main__":
-    main()
+from parquet_index_spark.workload import latest_green_rounds  # noqa: F401

@@ -16,6 +16,9 @@ Writes STRESS_<label>.json next to the repo's bench payloads and prints
 one JSON line. Run standalone (not concurrently with pytest/bench — the
 tables live under /tmp/spark_graft_stress). STRESS_SCALE env overrides
 the replication factor (default 8).
+
+``python tools/stress.py spark-fold --help`` instead times the Spark-job
+fold on a synthetic index of millions of blocks (see spark_fold_main).
 """
 
 from __future__ import annotations
@@ -641,5 +644,182 @@ def main() -> None:
     spark.stop()
 
 
+# ---------------------------------------------------------------------------
+# Spark-job fold at the scale where it runs
+# ---------------------------------------------------------------------------
+# `python tools/stress.py spark-fold [--blocks N] ...` writes (once) a
+# synthetic index of N row groups — stats shards in collector.STATS_SCHEMA
+# plus a matching manifest, no data files — and times the Spark-job fold
+# on it: prune_files_with_spark on point lookups, count_files_with_spark
+# on narrow ranges. Per op it prints wall time, Spark jobs and tasks,
+# executor JVM CPU, and the CPU of the JVM plus its Python workers (the
+# executor side of a Python task runs outside the JVM's own counters).
+
+
+def _synthetic_index(root: str, blocks: int, files: int, shards: int,
+                     rows_per_block: int = 1000):
+    """IndexMetadata over a synthetic index: ``files`` files of
+    ``blocks // files`` row groups each, one LONG column ``id`` clustered
+    so block b of file f covers ids [(f*B + b)*R, (f*B + b + 1)*R). Each
+    shard holds whole files, as the collector writes them."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import types as T
+
+    from parquet_index_spark.collector import FILES_SCHEMA, STATS_SCHEMA
+    from parquet_index_spark.metastore import IndexMetadata
+
+    per_file = blocks // files
+    index_dir = os.path.join(root, f"index_{files}x{per_file}_{shards}")
+    stats_dir = os.path.join(index_dir, "stats")
+    paths = np.array([f"f{i:07d}.parquet" for i in range(files)],
+                     dtype=object)
+    meta = {"table_path": os.path.join(root, "table"),
+            "data_schema": json.loads(T.StructType(
+                [T.StructField("id", T.LongType())]).json()),
+            "index_columns": {"id": "long"}, "partition_columns": {},
+            "filter_type": None}
+    if not os.path.isfile(os.path.join(index_dir, "_SUCCESS")):
+        shutil.rmtree(index_dir, ignore_errors=True)
+        os.makedirs(stats_dir)
+        for k, fids in enumerate(np.array_split(np.arange(files), shards)):
+            fid = np.repeat(fids, per_file)
+            blk = np.tile(np.arange(per_file), len(fids))
+            lo = (fid * per_file + blk) * rows_per_block
+            n = len(fid)
+            cols = {
+                "path": pa.array(paths[fid], pa.string()),
+                "block": pa.array(blk, pa.int32()),
+                "rows": pa.array(np.full(n, rows_per_block), pa.int64()),
+                "column": pa.array(["id"] * n, pa.string()),
+                "nulls": pa.array(np.zeros(n, np.int64)),
+                "has_stats": pa.array(np.ones(n, bool)),
+                "min_long": pa.array(lo),
+                "max_long": pa.array(lo + rows_per_block - 1)}
+            table = pa.table({f.name: cols.get(f.name, pa.nulls(n, f.type))
+                              for f in STATS_SCHEMA}, schema=STATS_SCHEMA)
+            pq.write_table(table, os.path.join(
+                stats_dir, f"part-{k:05d}.parquet"), compression="zstd")
+        pq.write_table(pa.table({
+            "path": pa.array(paths, pa.string()),
+            "size": pa.array(np.full(files, 1 << 27), pa.int64()),
+            "blocks": pa.array(np.full(files, per_file), pa.int64()),
+            "mtime_ns": pa.array(np.zeros(files, np.int64)),
+            "rows": pa.array(np.full(files, per_file * rows_per_block),
+                             pa.int64()),
+            "partition_json": pa.array(["{}"] * files, pa.string())},
+            schema=FILES_SCHEMA), os.path.join(index_dir, "files.parquet"))
+        with open(os.path.join(index_dir, "_table_metadata.json"), "w") as f:
+            json.dump(meta, f)
+        open(os.path.join(index_dir, "_SUCCESS"), "w").close()
+    files_df = pq.read_table(os.path.join(index_dir, "files.parquet"))
+    return IndexMetadata(index_dir, meta, files_df.to_pandas())
+
+
+def _tree_cpu_s(pid: int) -> float:
+    """CPU seconds of process ``pid`` and all its live descendants."""
+    hz = os.sysconf("SC_CLK_TCK")
+    procs = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                f = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        procs[int(entry)] = (int(f[1]), sum(int(x) for x in f[11:15]))
+    keep, total = {pid}, 0
+    for _ in range(4):  # JVM -> pyspark daemon -> worker forks
+        keep |= {p for p, (pp, _c) in procs.items() if pp in keep}
+    for p in keep:
+        total += procs.get(p, (0, 0))[1]
+    return total / hz
+
+
+def _job_counters(sc, group: str) -> dict:
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    out = {"jobs": 0, "tasks": 0, "jvm_cpu_ms": 0.0}
+    for job_id in tracker.getJobIdsForGroup(group):
+        out["jobs"] += 1
+        info = tracker.getJobInfo(job_id)
+        for stage_id in (info.stageIds if info is not None else ()):
+            sd = store.lastStageAttempt(stage_id)
+            if sd.status().toString() == "SKIPPED":
+                continue
+            out["tasks"] += sd.numTasks()
+            out["jvm_cpu_ms"] += sd.executorCpuTime() / 1e6
+    return out
+
+
+def spark_fold_main(argv) -> None:
+    import argparse
+    import statistics
+
+    ap = argparse.ArgumentParser(prog="stress.py spark-fold")
+    ap.add_argument("--blocks", type=int, default=5_000_000)
+    ap.add_argument("--files", type=int, default=50_000)
+    ap.add_argument("--shards", type=int, default=8)
+    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--cpus", default="4")
+    ap.add_argument("--root", default=os.path.join(ROOT, "spark_fold"))
+    ap.add_argument("--label", default="")
+    args = ap.parse_args(argv)
+
+    spark = (SparkSession.builder.master(f"local[{args.cpus}]")
+             .appName("parquet-index-spark-fold-stress")
+             .config("spark.sql.shuffle.partitions", args.cpus)
+             .config("spark.ui.enabled", "false").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    from parquet_index_spark import predicates as PR
+    from parquet_index_spark.pruning_spark import (count_files_with_spark,
+                                                   prune_files_with_spark)
+
+    t0 = time.time()
+    md = _synthetic_index(args.root, args.blocks, args.files, args.shards)
+    gen_s = time.time() - t0
+    sc = spark.sparkContext
+    jvm_pid = sc._gateway.proc.pid
+    span = int(md.files["rows"].sum())
+    ops = {
+        "prune_point": lambda i: prune_files_with_spark(
+            spark, md, PR.Eq("id", (span // (args.reps + 2)) * i + 7)),
+        "count_range": lambda i: count_files_with_spark(
+            spark, md, PR.And((PR.Ge("id", span // 3 + 1000 * i),
+                               PR.Lt("id", span // 3 + 1000 * i + 50_000)))),
+    }
+    report = {"label": args.label, "blocks": int(md.files["blocks"].sum()),
+              "files": len(md.files), "shards": args.shards,
+              "cpus": int(args.cpus), "generate_s": round(gen_s, 2),
+              "ops": {}}
+    for name, op in ops.items():
+        runs = []
+        for i in range(args.reps + 1):  # first run warms the JVM
+            group = f"fold-{name}-{i}"
+            sc.setJobGroup(group, group)
+            c0, w0 = _tree_cpu_s(jvm_pid), time.perf_counter()
+            result = op(i)
+            wall_ms = (time.perf_counter() - w0) * 1000
+            cpu_ms = (_tree_cpu_s(jvm_pid) - c0) * 1000
+            if i:
+                runs.append({"wall_ms": round(wall_ms, 1),
+                             "tree_cpu_ms": round(cpu_ms, 1),
+                             **_job_counters(sc, group)})
+        kept = result if name == "prune_point" else result[1]
+        report["ops"][name] = {
+            "wall_p50_ms": statistics.median(r["wall_ms"] for r in runs),
+            "tree_cpu_p50_ms": statistics.median(r["tree_cpu_ms"]
+                                                 for r in runs),
+            "files_kept_last": len(kept), "runs": runs}
+    print(json.dumps(report))
+    spark.stop()
+
+
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["spark-fold"]:
+        spark_fold_main(sys.argv[2:])
+    else:
+        main()
